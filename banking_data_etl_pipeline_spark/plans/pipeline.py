@@ -32,8 +32,6 @@ from ..functions import scoring
 from ..operators import errors as E
 from ..schema import (
     BANK_COLUMNS,
-    CATEGORICAL_FIELDS,
-    ERRORS_COL,
     FLOAT_FIELDS,
     INT_FIELDS,
     NUM_CSV_COLUMNS,
@@ -138,18 +136,6 @@ def parse_stage(lines: DataFrame, cfg: PipelineConfig, line_col: str = "line") -
 
     df = df.withColumn("_ingestion_timestamp", E.when_clean(_ts(cfg)))
     return df.drop("_ncols_bad", *[f"_s_{name}" for name, _ in BANK_COLUMNS])
-
-
-def from_typed(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Adapter: start the pipeline from an already-typed bank DataFrame
-    (e.g. the deterministic synthetic table) instead of raw CSV lines.
-    Normalizes categoricals and installs the error channel."""
-    out = df
-    for c in CATEGORICAL_FIELDS:
-        out = out.withColumn(c, F.lower(F.trim(F.col(c))))
-    out = out.withColumn("_raw", F.concat_ws(";", *[c for c, _ in BANK_COLUMNS]))
-    out = out.withColumn(ERRORS_COL, E.empty_errors())
-    return out.withColumn("_ingestion_timestamp", _ts(cfg))
 
 
 # ------------------------------------------------------------- validate

@@ -1559,7 +1559,7 @@ def unigram_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING text-quality gate over a documents drop dir
-    (file source + availableNow + append memory sink); stateless, so
+    (file source + availableNow + append parquet drain); stateless, so
     it is checked against the batch scan's oracle SQL."""
     from .streaming import docs as SD
 

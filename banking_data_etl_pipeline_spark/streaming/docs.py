@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import texttools
+from .events import drain
 
 DOCS_SCHEMA = T.StructType(
     [
@@ -110,34 +111,19 @@ def minhash_screen_stream(
             F.round(_sig_agreement(num_hashes), 6).alias("est_jaccard"),
         )
     )
-    q = (
-        pairs.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    return drain(spark, pairs, name, "append")
 
 
 def run_quality_gate_stream(
     spark: SparkSession, docs_dir: str, name: str, min_quality: float = 0.5
 ) -> DataFrame:
     """Drive the streaming gate to completion over the (bounded) drop
-    dir via availableNow + append to a memory sink — the test harness
-    for the unbounded plan. Stateless, so the collected result is
-    row-identical to the batch ``quality_gate`` over the same files."""
-    q = (
-        quality_gate(docs_stream(spark, docs_dir), min_quality)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    dir via availableNow, appending through ``drain``'s parquet sink —
+    the test harness for the unbounded plan. Stateless, so the drained
+    result is row-identical to the batch ``quality_gate`` over the same
+    files."""
+    gated = quality_gate(docs_stream(spark, docs_dir), min_quality)
+    return drain(spark, gated, name, "append")
 
 
 def bloom_screen_stream(
@@ -175,15 +161,7 @@ def bloom_screen_stream(
             probe, lambda p: F.array_contains(bit_set, p)
         ).alias("bloom_hit"),
     )
-    q = (
-        gated.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    return drain(spark, gated, name, "append")
 
 
 def cms_ngrams_stream(
@@ -210,22 +188,12 @@ def cms_ngrams_stream(
     be bit-equal to the batch build, so this is the strongest
     batch-equivalence form (the ``stream_window_agg`` convention)."""
     from ..operators import sketches
-    from .events import _state_partitions
 
     s_grams, s_counters, _b = sketches._cms_ngram_parts(
         docs_stream(spark, docs_dir), n, d, w, "text"
     )
-    with _state_partitions(spark, 16):
-        q = (
-            s_counters.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     counters = (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(spark, s_counters, name, "update", partitions=16)
         .groupBy("j", "bucket")
         .agg(F.max("cnt").alias("cnt"))
     )

@@ -9,7 +9,9 @@ sessionization.
 Batch/stream parity: ``windowed_agg_batch`` is the exact batch twin of
 ``windowed_agg_stream`` (same expressions), which is what the DuckDB
 oracle checks; the streaming variant is exercised by tests with a
-file source + ``availableNow`` trigger + memory sink.
+file source + ``availableNow`` trigger, drained by ``drain`` (parquet
+sink for append output, memory sink for bounded complete/update
+output).
 """
 
 from __future__ import annotations
@@ -128,6 +130,67 @@ def _state_partitions(spark: SparkSession, n: int = 8):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def drain(
+    spark: SparkSession,
+    stream: DataFrame,
+    name: str,
+    mode: str,
+    finalize=None,
+    partitions: int = 8,
+) -> DataFrame:
+    """Run ``stream`` to completion with an availableNow trigger and
+    return ``finalize`` (a batch reduction, identity by default) over
+    its output. The one drain every bounded stream query uses; the
+    sink follows from the output mode.
+
+    ``append``: the output grows with the input, so it lands through
+    the EXECUTOR-SIDE parquet file sink — the fault-tolerant,
+    exactly-once sink a real restart uses. Each micro-batch is written
+    by the query's own tasks, so row-scale data never crosses the
+    driver (a memory sink would collect every output row there — at
+    100 TB a driver OOM by construction). The landed files are read
+    back with the stream's own schema, so an empty feed yields zero
+    rows instead of a schema-inference error; ``finalize`` then runs as
+    an ordinary distributed batch plan and only its result is
+    localCheckpoint-materialized, so the private temp dir (sink +
+    checkpoint) can be deleted before returning. The blocks live in
+    executor storage, freed by the ContextCleaner once the frame is
+    dropped.
+
+    ``complete`` / ``update``: Spark's file sink refuses these modes,
+    so the rows go to the memory sink ``name``. That is bounded: the
+    output of an aggregation in these modes is bounded by the
+    aggregation's keyspace, not by the feed length.
+
+    ``partitions`` pins the state-store partition count (see
+    ``_state_partitions``)."""
+    import os
+    import shutil
+    import tempfile
+
+    finalize = finalize or (lambda rows: rows)
+    writer = (
+        stream.writeStream.outputMode(mode)
+        .queryName(name)
+        .trigger(availableNow=True)
+    )
+    if mode != "append":
+        with _state_partitions(spark, partitions):
+            writer.format("memory").start().awaitTermination()
+        return finalize(spark.table(name))
+    work = tempfile.mkdtemp(prefix="spark_graft_drain_")
+    try:
+        sink = os.path.join(work, "sink")
+        with _state_partitions(spark, partitions):
+            writer.format("parquet").option("path", sink).option(
+                "checkpointLocation", os.path.join(work, "ckpt")
+            ).start().awaitTermination()
+        rows = spark.read.schema(stream.schema).parquet(sink)
+        return finalize(rows).localCheckpoint()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def windowed_agg_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     """The same aggregation as an unbounded plan: file source +
     10-minute watermark (late-data bound; state for a window is freed
@@ -140,17 +203,7 @@ def run_stream_to_memory(spark: SparkSession, events_dir: str, name: str) -> Dat
     """Drive the streaming agg to completion on the (bounded) events
     dir via availableNow, collect from a memory sink. Test harness for
     the unbounded plan."""
-    with _state_partitions(spark):
-        q = (
-            windowed_agg_stream(spark, events_dir)
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    return drain(spark, windowed_agg_stream(spark, events_dir), name, "complete")
 
 
 def stateful_user_totals(spark: SparkSession, events_dir: str, name: str) -> DataFrame:
@@ -171,16 +224,7 @@ def stateful_user_totals(spark: SparkSession, events_dir: str, name: str) -> Dat
     """
     stream = events_stream(spark, events_dir)
     updates = _user_totals_updates(stream)
-    with _state_partitions(spark):
-        q = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _terminal_user_totals(spark.sql(f"SELECT * FROM {name}"))
+    return _terminal_user_totals(drain(spark, updates, name, "update"))
 
 
 def _user_totals_updates(stream: DataFrame, mode: str = "update") -> DataFrame:
@@ -354,70 +398,19 @@ def stream_dedup_totals(
     )
     # keyspace here is EVERY event_id inside the watermark (large), so
     # more state partitions pay off — unlike the per-user operators
-    with _state_partitions(spark, 16):
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return (
-        spark.sql(f"SELECT * FROM {name}")
-        .groupBy("event_type")
-        .agg(
+    return drain(
+        spark,
+        stream,
+        name,
+        "append",
+        lambda rows: rows.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(
                 F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
             ).alias("sum_value"),
-        )
+        ),
+        partitions=16,
     )
-
-
-def _drain_interval_join(
-    spark: SparkSession, joined: DataFrame, name: str, finalize
-) -> DataFrame:
-    """Drain a stream-stream join through an EXECUTOR-SIDE parquet
-    sink and reduce the landed rows with ``finalize`` (a batch
-    aggregation), returning the localCheckpoint-materialized result.
-
-    The earlier memory-sink form collected every JOINED ROW to the
-    driver (~219k rows at sf0.1) before the terminal aggregation — at
-    100 TB that is a driver OOM by construction (guide §5: the driver
-    should do almost no data work). The parquet file sink is the same
-    fault-tolerant, exactly-once sink the checkpoint-recovery proof
-    uses: each micro-batch's join output is written by the join tasks
-    themselves, row-scale data never crosses the driver, and the
-    terminal aggregation runs as an ordinary distributed batch plan
-    over the landed files. The aggregated result (keyed per event —
-    orders of magnitude smaller than the join output) is
-    localCheckpoint-materialized so the scratch dir can be deleted
-    before returning; its blocks live in executor storage, freed by
-    the ContextCleaner once the frame is dropped (bench.py's per-query
-    GC nudge covers the battery)."""
-    import os
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="spark_graft_ij_")
-    try:
-        sink = os.path.join(work, "sink")
-        ckpt = os.path.join(work, "ckpt")
-        with _state_partitions(spark, 16):
-            q = (
-                joined.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return finalize(spark.read.parquet(sink)).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def stream_interval_join_counts(
@@ -433,8 +426,8 @@ def stream_interval_join_counts(
     (an unconstrained stream join would buffer forever). Batch twin:
     the inner form of ``relational.range_join_followers`` — the oracle
     checks the streamed counts equal the batch range join exactly.
-    Join output lands through the executor-side parquet sink
-    (``_drain_interval_join``), never the driver."""
+    Join output lands through ``drain``'s executor-side parquet sink,
+    never the driver."""
     def side(alias: str) -> DataFrame:
         return (
             events_stream(spark, events_dir)
@@ -455,13 +448,15 @@ def stream_interval_join_counts(
         & (F.col("l_id") != F.col("r_id")),
         "inner",
     )
-    return _drain_interval_join(
+    return drain(
         spark,
         joined.select("l_id", "l_user"),
         name,
+        "append",
         lambda rows: rows.groupBy(
             F.col("l_id").alias("event_id"), F.col("l_user").alias("user_id")
         ).agg(F.count(F.lit(1)).alias("n_followers")),
+        partitions=16,
     )
 
 
@@ -495,25 +490,13 @@ def stream_sessionize(
         F.expr("unix_micros(min(ts)) DIV 1000000").alias("session_start_epoch"),
         F.expr("unix_micros(max(ts)) DIV 1000000").alias("session_end_epoch"),
     )
-    with _state_partitions(spark):
-        q = (
-            sessions.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     w = Window.partitionBy("user_id").orderBy("session_start_epoch")
-    return (
-        spark.sql(f"SELECT * FROM {name}")
-        .select(
-            "user_id",
-            (F.row_number().over(w) - 1).cast("long").alias("session_seq"),
-            "n_events",
-            "session_start_epoch",
-            "session_end_epoch",
-        )
+    return drain(spark, sessions, name, "complete").select(
+        "user_id",
+        (F.row_number().over(w) - 1).cast("long").alias("session_seq"),
+        "n_events",
+        "session_start_epoch",
+        "session_end_epoch",
     )
 
 
@@ -552,22 +535,19 @@ def stream_sessionize_append(
         F.expr("unix_micros(min(ts)) DIV 1000000").alias("session_start_epoch"),
         F.expr("unix_micros(max(ts)) DIV 1000000").alias("session_end_epoch"),
     )
-    with _state_partitions(spark):
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     w = Window.partitionBy("user_id").orderBy("session_start_epoch")
-    return spark.sql(f"SELECT * FROM {name}").select(
-        "user_id",
-        (F.row_number().over(w) - 1).cast("long").alias("session_seq"),
-        "n_events",
-        "session_start_epoch",
-        "session_end_epoch",
+    return drain(
+        spark,
+        sessions,
+        name,
+        "append",
+        lambda rows: rows.select(
+            "user_id",
+            (F.row_number().over(w) - 1).cast("long").alias("session_seq"),
+            "n_events",
+            "session_start_epoch",
+            "session_end_epoch",
+        ),
     )
 
 
@@ -633,16 +613,7 @@ def stream_static_join(
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
         ).alias("sum_value"),
     )
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    return drain(spark, agg, name, "complete")
 
 
 def stream_left_interval_join_counts(
@@ -683,13 +654,15 @@ def stream_left_interval_join_counts(
         & (F.col("l_id") != F.col("r_id")),
         "left_outer",
     )
-    return _drain_interval_join(
+    return drain(
         spark,
         joined.select("l_id", "l_user", "r_id"),
         name,
+        "append",
         lambda rows: rows.groupBy(
             F.col("l_id").alias("event_id"), F.col("l_user").alias("user_id")
         ).agg(F.count(F.col("r_id")).alias("n_followers")),
+        partitions=16,
     )
 
 
@@ -799,22 +772,13 @@ def funnel_stream(
     updates = stream.groupBy("user_id").applyInPandasWithState(
         fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    with _state_partitions(spark):
-        q = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # last emission per user == final funnel (n_seen strictly monotone,
     # so the struct max never tie-breaks on the nullable stage fields)
     last = F.max(
         F.struct("n_seen", "t_stage1", "t_stage2", "t_stage3", "funnel_depth")
     ).alias("s")
     return (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(spark, updates, name, "update")
         .groupBy("user_id")
         .agg(last)
         .select(
@@ -882,15 +846,7 @@ def psi_drift_stream(
         .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("n_cur"))
     )
-    q = (
-        stream_bins.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    cur_bins = spark.sql(f"SELECT bin, n_cur FROM {name}")
+    cur_bins = drain(spark, stream_bins, name, "complete")
     ref_bins = (
         ref.select(bucket(F.col(value_col)).alias("bin"))
         .groupBy("bin")
@@ -1009,15 +965,6 @@ def attribution_stream(
     updates = stream.groupBy("user_id").applyInPandasWithState(
         fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    with _state_partitions(spark):
-        q = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # last emission per purchase: n_seen is monotone per user, and the
     # attribution fields ride the struct so they come from that same
     # final emission
@@ -1025,7 +972,7 @@ def attribution_stream(
         F.struct("n_seen", "attr_type", "attr_event_id", "gap_us")
     ).alias("s")
     return (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(spark, updates, name, "update")
         .groupBy("event_id", "user_id")
         .agg(last)
         .select(
@@ -1133,18 +1080,9 @@ def ewma_stream(
     updates = stream.groupBy("user_id").applyInPandasWithState(
         fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    with _state_partitions(spark):
-        q = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     last = F.max(F.struct("n_seen", "value", "pred")).alias("s")
     return (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(spark, updates, name, "update")
         .groupBy("event_id", "user_id")
         .agg(last)
         .select(
@@ -1182,16 +1120,9 @@ def srm_stream(
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["user_id"])
     )
-    with _state_partitions(spark, 16):
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return experiments.srm_check(spark.sql(f"SELECT * FROM {name}"))
+    return drain(
+        spark, stream, name, "append", experiments.srm_check, partitions=16
+    )
 
 
 def topk_users_stream(
@@ -1218,17 +1149,8 @@ def topk_users_stream(
     counts = stream.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    with _state_partitions(spark):
-        q = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     final = (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(spark, counts, name, "update")
         .groupBy("user_id")
         .agg(F.max("n_events").cast("bigint").alias("n_events"))
     )
@@ -1284,16 +1206,9 @@ def msprt_stream(
     kept unwatermarked here so the drained availableNow run is
     bit-equivalent to batch."""
     agg = _msprt_partials(events_stream(spark, events_dir))
-    with _state_partitions(spark, 16):
-        q = (
-            agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _msprt_readout(spark.sql(f"SELECT * FROM {name}"), alpha)
+    return _msprt_readout(
+        drain(spark, agg, name, "update", partitions=16), alpha
+    )
 
 
 def _msprt_partials(stream: DataFrame) -> DataFrame:
@@ -1472,17 +1387,8 @@ def histogram_p95_stream(
     ).groupBy("event_type", "bucket").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    with _state_partitions(spark):
-        q = (
-            cells.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     final = (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(spark, cells, name, "update")
         .groupBy("event_type", "bucket")
         .agg(F.max("cnt").cast("bigint").alias("cnt"))
     )
@@ -1561,17 +1467,8 @@ def hll_stream(
         .groupBy("idx")
         .agg(F.max("rho").alias("reg"))
     )
-    with _state_partitions(spark):
-        q = (
-            s_regs.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     regs = (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(spark, s_regs, name, "update")
         .groupBy("idx")
         .agg(F.max("reg").alias("reg"))
     )
@@ -1640,17 +1537,8 @@ def langid_mix_stream(spark: SparkSession, docs_dir: str, name: str) -> DataFram
     counts = stream.groupBy(
         texttools.lang_id(F.col("text")).alias("pred")
     ).agg(F.count(F.lit(1)).alias("n"))
-    with _state_partitions(spark):
-        q = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     final = (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(spark, counts, name, "update")
         .groupBy("pred")
         .agg(F.max("n").cast("bigint").alias("n"))
     )
@@ -1691,17 +1579,8 @@ def moments_stream(
         "event_type", "value"
     )
     s_agg = profiling.moments_power_sums(stream, "value", unit)
-    with _state_partitions(spark):
-        q = (
-            s_agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     latest = (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(spark, s_agg, name, "update")
         .groupBy("event_type")
         .agg(
             F.max("n").cast("bigint").alias("n"),

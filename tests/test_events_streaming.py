@@ -437,3 +437,55 @@ def test_stateful_totals_recovery_carries_state_across_restart(spark):
     assert any(
         0 < phase2_only.get(u, 0) < n for u, (n, _s) in got.items()
     ), "parity split left no user spanning the restart boundary"
+
+
+def test_empty_feed_drains_to_zero_rows(spark):
+    """A consumer started before its producer sees an empty feed dir:
+    append (parquet) and complete (memory) drains must both return zero
+    rows with the query's normal columns, not a schema-inference
+    error from reading an empty sink."""
+    d = tempfile.mkdtemp(prefix="test_empty_feed_")
+    cases = {
+        EV.stream_interval_join_counts: ["event_id", "user_id", "n_followers"],
+        EV.stream_dedup_totals: ["event_type", "n_events", "sum_value"],
+        EV.run_stream_to_memory: [
+            "window_start_epoch", "event_type", "n_events", "sum_value"
+        ],
+    }
+    for fn, cols in cases.items():
+        out = fn(spark, d, f"test_empty_{fn.__name__}")
+        assert out.columns == cols, fn.__name__
+        assert out.count() == 0, fn.__name__
+
+
+def test_streaming_queries_share_one_drain():
+    """Every bounded stream query drains through ``events.drain``: the
+    memory sink is written in exactly one place, and only ``drain`` and
+    the three checkpoint-restart functions (whose checkpoint and sink must
+    outlive one query) wait on a query themselves."""
+    import ast
+    import pathlib
+    import re
+
+    def owners(pattern: str) -> list[str]:
+        found = []
+        for path in sorted(pathlib.Path(EV.__file__).parent.glob("*.py")):
+            src = path.read_text(encoding="utf-8")
+            defs = [
+                (n.lineno, n.end_lineno, n.name)
+                for n in ast.parse(src).body
+                if isinstance(n, ast.FunctionDef)
+            ]
+            for i, line in enumerate(src.splitlines(), 1):
+                owner = next(
+                    (name for a, b, name in defs if a <= i <= b),
+                    f"{path.name}:{i}",
+                )
+                found += [owner] * len(re.findall(pattern, line))
+        return found
+
+    assert owners(r"""\.format\(\s*["']memory["']""") == ["drain"]
+    waiters = set(owners(r"awaitTermination\("))
+    restart = {"stateful_totals_recovery", "msprt_recovery", "run_upsert_stream"}
+    assert "drain" in waiters
+    assert waiters <= {"drain"} | restart, waiters - restart
